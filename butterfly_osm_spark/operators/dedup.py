@@ -272,8 +272,8 @@ def eager_release(result: DataFrame, holds: list[DataFrame]) -> DataFrame:
     """Materialize ``result`` into the block cache, then free every frame
     in ``holds`` — both plain ``persist``-ed frames (unpersist) and
     ``localCheckpoint``-ed label tables (release_checkpoint; the cache
-    manager never sees those blocks, see connected_components). This is
-    the knn_join caching contract generalized: an operator that persists
+    manager never sees those blocks, see connected_components). The
+    caching contract: an operator that persists
     corpus-sized intermediates MUST NOT park them for the session — it
     returns ONE bounded persisted frame, and the CALLER owns releasing
     that frame (``.unpersist()`` once consumed, or clearCache as bench.py
@@ -318,7 +318,7 @@ def connected_components(
     executor churn, swap in a reliable ``checkpoint()`` dir — same
     protocol, durable blocks.)
 
-    Cache hygiene (same discipline as knn_join's phase release): each
+    Cache hygiene (the ``eager_release`` discipline): each
     iteration's checkpoint blocks are freed as soon as the NEXT round's
     checkpoint is eagerly materialized and the convergence count consumed
     the old table — ``catalog.clearCache()`` does NOT reach RDD-level

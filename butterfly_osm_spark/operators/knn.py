@@ -1,31 +1,47 @@
-"""kNN snap via k-ring expansion join (J5) with adaptive resolution and
-iterative ring widening.
+"""kNN snap: one tile-keyed exchange, a vectorized ring-walk kernel per
+tile, one per-query merge.
 
 Reference semantics: concentric cell rings around the query cell with an
 early exit once the accepted k-th best distance beats the next ring's
 inner edge (route/src/server/snap_index.rs:833-904 ``iterate_rings``;
 k-th-best tracking :625-754, the #525 dense-cell fix), under a 5 km snap
-cutoff (route/src/server/spatial.rs:9). The reference also sizes its
-grid cells from data density (``cell_log2``, snap_index.rs:183-201) —
-without that, urban cells hold thousands of points and the candidate
-join goes quadratic (the exact #525 pathology, reproduced here at sf1
-before this fix).
+cutoff (route/src/server/spatial.rs:9). Grid cells are sized from data
+density (``cell_log2``, snap_index.rs:183-201).
 
-Spark-first shape (SURVEY.md §7.1 step 5):
-- resolution: the COARSEST grid level whose p95 cell occupancy stays
-  under ``OCC_TARGET`` — computed in one pass (res-13 counts rolled up
-  to every parent level, two shuffles, tiny distinct-cell input).
-- phase loop with STATIC bounds: rectangles of Chebyshev radius
-  R = 1, 4, 16, ... until R provably covers the cutoff. Which queries
-  continue is decided inside the plan (anti-joins on the ring-bound
-  test) — no data-dependent driver loop.
-- ring-bound contract: after covering ±R cells, any unexplored point is
-  at least R * min_edge metres away; a query is DONE when its k-th
-  candidate beats that bound (or the rect covers the whole cutoff).
-- final rank: ``row_number() OVER (PARTITION BY query ORDER BY d2, id)``
-  (W1 deterministic ties); the query side of the candidate join is
-  broadcast (bounded request batch), so the target table never shuffles
-  by cell — the only full shuffle per phase is candidates -> query_id.
+Shape:
+
+- Tiles. Every target is keyed by its cell at ``tile_res(cutoff_m)``,
+  the finest level whose edge spans a query's whole routing box
+  ``±(int(cutoff_m / M_PER_DEG * 1e7) + 1)`` on both axes. The box is
+  the oracle's bbox plus one fixed-point unit, so every target the
+  oracle can keep lies inside it. An interval no longer than a tile
+  edge meets at most 2 tiles per axis, so the tiles under the box's 4
+  corners are every tile it overlaps: at most 4. The edge is then more
+  than 2 × cutoff_m; for 5 km it is res 6 (0.2°).
+- Exchange. Each query row goes to its distinct corner tiles, each
+  target row to its own tile; both sides travel in ONE frame (``is_q``
+  tells them apart) through ONE shuffle on (tile, sub) into
+  ``mapInArrow``. It carries at most 4 copies of a query and one copy of
+  a target (more only in a split hot tile), never a candidate pair;
+  tiles that hold no target, or that no query reaches, drop out before
+  it. ``mapInArrow`` rather than a cogroup: a grouped pandas call costs
+  ~20 ms per (tile, sub) group on a 4-core host, more than the kernel
+  (Python stage 2.0-2.3 s vs 0.8-1.0 s at sf0.01).
+- Kernel (``snap_tile``, per (tile, sub) group of a partition). Targets
+  are sorted by fine cell id (a CSR grid probed with ``searchsorted``);
+  with ``res=None`` the fine level comes from the tile's own occupancy.
+  All open queries walk Chebyshev rings of fine cells outward from their
+  own cell in lockstep, each stopping once its k-th best beats the inner
+  edge of the next ring, its ring passes the cutoff, or its ring covers
+  the tile. At most k rows (query_id, k, node_id, d2) leave per query
+  per tile.
+- Merge. ``row_number() OVER (PARTITION BY query_id ORDER BY d2,
+  node_id)`` keeps the best k across the query's tiles (W1 deterministic
+  ties).
+- Hot tiles. A tile whose queries × targets exceeds ``HOT_TILE_PAIRS``
+  is split: its queries hash into sub-buckets and its targets are
+  copied to each, so no single kernel call holds a quadratic group and
+  the sub-buckets spread over partitions.
 
 Ranking uses the reference's equirectangular metric with FIXED constants
 (spatial.rs:226-230) — pure arithmetic on fixed-point ints, bit-identical
@@ -34,189 +50,165 @@ across Spark / numpy / DuckDB, so ranks match the SQL oracle exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from .. import cells
-from ..geo import M_PER_DEG_LAT, M_PER_DEG_LON, equirect_d2_col, equirect_d2_sql
+from ..geo import E7, M_PER_DEG_LAT, M_PER_DEG_LON, equirect_d2_np, equirect_d2_sql
 
 CUTOFF_M = 5_000.0  # reference SNAP_CUTOFF (spatial.rs:9)
-# p95 cell occupancy ceiling (reference warns >8192/cell). The density
-# pick is then refined finer while the phase-2 ring still covers the
-# cutoff — see knn_join. Measured (honest repeats, results identical):
-#   sf0.1: res 11 5.3-9.1 s < res 10 9.6-84 s < res 9 18-27 s
-#   sf1:   res 12 87 s      < res 11 220 s    < res 13 ~490 s
-# i.e. finer wins (candidate volume dominates) EXCEPT when the finer
-# grid's cover radius outgrows the R0*growth phase-2 rectangle — then
-# open queries hit 1000+-cell shells and the join explodes (the sf1
-# res-13 cliff). Occupancy target 64 + covering refinement picks the
-# measured winner at both scales.
-OCC_TARGET = 64
-RES_FLOOR, RES_CEIL = 7, 13
-# phase schedule: R = R0, R0*G, ... — measured at sf0.1/local[32]:
-# (R0=2, G=8) resolves ~all queries in phase 1 (25-cell rect at p95
-# occupancy 64) and finishes in ONE more covering phase, 1.8x faster than
-# (1, 4)'s three phases; a single full-rect phase (R0=rx_max) is 2.8x
-# slower — candidate volume dominates. Stage-count x candidate-volume
-# trade, not a correctness knob (results hash-identical across schedules).
-RING_R0 = 2
-RING_GROWTH = 8
+# density rule for res=None: the coarsest fine level whose mean occupancy
+# over occupied cells is at most this many targets
+TARGETS_PER_CELL = 16
+# a tile holding more query x target pairs than this is split into
+# sub-buckets of its queries
+HOT_TILE_PAIRS = 1 << 26
 
 
-def _edge_m(res: int) -> tuple[float, float]:
-    deg = cells.SIZE_E7[res] / 1e7
-    return deg * M_PER_DEG_LON, deg * M_PER_DEG_LAT
+def _box_e7(cutoff_m: float) -> tuple[int, int]:
+    """Half-widths (lon, lat) of a query's routing box in 1e-7 degrees."""
+    return int(cutoff_m / M_PER_DEG_LON * 1e7) + 1, int(cutoff_m / M_PER_DEG_LAT * 1e7) + 1
 
 
-def adaptive_res(targets: DataFrame, occ_target: int = OCC_TARGET) -> int:
-    """Coarsest res in [7, 13] with p95 cell occupancy <= occ_target.
-
-    One fine-grained count, then every parent level derived from the
-    distinct-cell table in a single stacked aggregation.
-    """
-    fine = targets.select(cells.cell_col("lon_e7", "lat_e7", RES_CEIL).alias("c13")).groupBy(
-        "c13"
-    ).agg(F.count(F.lit(1)).alias("n"))
-    stacked = fine.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("res"),
-                        cells.parent_col("c13", RES_CEIL, r).alias("cell"),
-                    )
-                    for r in range(RES_FLOOR, RES_CEIL + 1)
-                ]
-            )
-        ).alias("rc"),
-        "n",
-    ).select(F.col("rc.res").alias("res"), F.col("rc.cell").alias("cell"), "n")
-    occ = (
-        stacked.groupBy("res", "cell")
-        .agg(F.sum("n").alias("occ"))
-        .groupBy("res")
-        .agg(F.expr("percentile_approx(occ, 0.95)").alias("p95"))
-        .collect()
-    )
-    p95 = {r["res"]: r["p95"] for r in occ}
-    for r in range(RES_FLOOR, RES_CEIL + 1):  # coarsest acceptable wins
-        if p95.get(r, 0) <= occ_target:
+def tile_res(cutoff_m: float) -> int:
+    """Finest cell level whose edge is at least the routing box's width."""
+    width = 2 * max(_box_e7(cutoff_m))
+    for r in range(cells.RES_MAX, cells.RES_MIN - 1, -1):
+        if cells.SIZE_E7[r] >= width:
             return r
-    return RES_CEIL
+    raise ValueError(f"cutoff {cutoff_m} m is wider than the coarsest cell")
 
 
-# broadcast the exploded query-cell side only below this row count: ~4M
-# rows x ~40 B is a few hundred MB of driver assembly — beyond it the
-# "bounded request batch" assumption no longer holds and the plan must
-# fall back to a shuffle join (measured: an unconditional hint OOM-killed
-# the sf4/local[2] scaling level at 24M exploded rows)
-BROADCAST_MAX_ROWS = 4_000_000
+def _fine_res(tlon: np.ndarray, tlat: np.ndarray, coarsest: int) -> int:
+    x, y = cells.xy_np(tlon, tlat, cells.RES_MAX)
+    for r in range(coarsest, cells.RES_MAX):
+        d = cells.RES_MAX - r
+        if len(x) <= TARGETS_PER_CELL * np.unique(((y >> d) << 32) | (x >> d)).size:
+            return r
+    return cells.RES_MAX
 
 
-def _candidates(
-    queries: DataFrame,
-    targets_cells: DataFrame,
-    res: int,
-    rx: int,
-    ry: int,
-    prev_rx: int = -1,
-    prev_ry: int = -1,
-    join_mode: str = "broadcast",
-) -> DataFrame:
-    """Explode queries by the (2rx+1)x(2ry+1) cell rectangle — MINUS the
-    previously-covered (2prev_rx+1)x(2prev_ry+1) rectangle (ring-shell
-    emission: widening phases only scan NEW cells; the top-k partial from
-    the inner rectangle is carried forward instead of re-scanned)."""
-    # offsets via nested sequence-explodes, not a literal array: a phase-2
-    # rectangle is >1000 offsets and a 1000-element literal array blows up
-    # the generated codegen method (janino compile seconds per call); two
-    # sequence explodes + a shell filter keep the generated code O(1)-sized
-    # regardless of R.
-    q = (
-        queries.withColumn("qcell", cells.cell_col("lon_e7", "lat_e7", res))
-        .select(
-            "query_id",
-            F.col("lon_e7").alias("qlon"),
-            F.col("lat_e7").alias("qlat"),
-            "k",
-            "qcell",
-            F.explode(F.sequence(F.lit(-rx), F.lit(rx))).alias("dx"),
-        )
-        .select(
-            "query_id",
-            "qlon",
-            "qlat",
-            "k",
-            "qcell",
-            "dx",
-            F.explode(F.sequence(F.lit(-ry), F.lit(ry))).alias("dy"),
-        )
-        .filter(~((F.abs("dx") <= F.lit(prev_rx)) & (F.abs("dy") <= F.lit(prev_ry))))
-        .select(
-            "query_id",
-            "qlon",
-            "qlat",
-            "k",
-            # dy/dx are ints from sequence(); the step multiply MUST be
-            # long — dy * 2^28 overflows int32 for |dy| >= 8 (fine
-            # resolutions), and ANSI mode (Spark 4 default) fails the task
-            (
-                F.col("qcell")
-                + F.col("dy").cast("long") * F.lit(1 << cells.Y_SHIFT).cast("long")
-                + F.col("dx").cast("long")
-            ).alias("cell_id"),
-        )
+def snap_tile(
+    qlon: np.ndarray,
+    qlat: np.ndarray,
+    qk: np.ndarray,
+    tid: np.ndarray,
+    tlon: np.ndarray,
+    tlat: np.ndarray,
+    cutoff_m: float,
+    res: int | None = None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Best ``qk[i]`` targets of one tile for every query ``i`` within
+    ``cutoff_m``, by (d2, node id). Returns (query index, node id, d2);
+    rows of one query are in rank order."""
+    tid = np.asarray(tid)
+    if len(qk) == 0 or len(tid) == 0:
+        return np.empty(0, np.int64), tid[:0], np.empty(0, np.float64)
+    if res is None:
+        res = _fine_res(tlon, tlat, tile_res(cutoff_m))
+    size = cells.SIZE_E7[res]
+    tx, ty = cells.xy_np(tlon, tlat, res)
+    gx0, gx1, gy0, gy1 = tx.min(), tx.max(), ty.min(), ty.max()
+    width = gx1 - gx0 + 1
+    key = (ty - gy0) * width + (tx - gx0)
+    order = np.argsort(key, kind="stable")
+    key, tid, tlon, tlat = key[order], tid[order], tlon[order], tlat[order]
+
+    qk = np.asarray(qk, dtype=np.int64)
+    qx, qy = cells.xy_np(qlon, qlat, res)
+    # rings below the first that reaches the targets' cell range are empty;
+    # the last ring covers the whole range
+    ring = np.maximum.reduce([gx0 - qx, qx - gx1, gy0 - qy, qy - gy1, np.zeros_like(qx)])
+    last = np.maximum.reduce([qx - gx0, gx1 - qx, qy - gy0, gy1 - qy])
+    c2 = cutoff_m * cutoff_m
+    min_m_per_deg = min(M_PER_DEG_LON, M_PER_DEG_LAT)
+
+    open_q = np.flatnonzero(qk > 0)
+    # running top-k of the open queries, sorted by (query, d2, node id)
+    bq, bn, bd = np.empty(0, np.int64), tid[:0], np.empty(0, np.float64)
+    done_q, done_n, done_d = [], [], []
+    while open_q.size:
+        r = ring[open_q]
+        # perimeter cells of ring r: four sides of 2r cells (one cell at r = 0)
+        n = np.where(r == 0, 1, 8 * r)
+        qi = np.repeat(open_q, n)
+        rr = np.repeat(r, n)
+        side, pos = np.divmod(np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n), np.maximum(2 * rr, 1))
+        a = pos - rr
+        cx = qx[qi] + np.choose(side, [a, rr, -a, -rr])
+        cy = qy[qi] + np.choose(side, [-rr, a, rr, -a])
+        inside = (cx >= gx0) & (cx <= gx1) & (cy >= gy0) & (cy <= gy1)
+        qi, ck = qi[inside], (cy[inside] - gy0) * width + (cx[inside] - gx0)
+        lo = np.searchsorted(key, ck, "left")
+        m = np.searchsorted(key, ck, "right") - lo
+        pq = np.repeat(qi, m)
+        pt = np.arange(m.sum()) - np.repeat(np.cumsum(m) - m, m) + np.repeat(lo, m)
+        d2 = equirect_d2_np(qlon[pq], qlat[pq], tlon[pt], tlat[pt])
+        hit = d2 <= c2
+
+        aq = np.concatenate([bq, pq[hit]])
+        an = np.concatenate([bn, tid[pt[hit]]])
+        ad = np.concatenate([bd, d2[hit]])
+        o = np.lexsort((an, ad, aq))
+        aq, an, ad = aq[o], an[o], ad[o]
+        idx = np.arange(len(aq))
+        start = np.maximum.accumulate(np.where(np.r_[True, aq[1:] != aq[:-1]], idx, 0))
+        keep = idx - start < qk[aq]
+        bq, bn, bd = aq[keep], an[keep], ad[keep]
+
+        found = np.bincount(bq, minlength=len(qk))[open_q]
+        kth = np.full(len(qk), np.inf)
+        ends = np.r_[bq[1:] != bq[:-1], True] if len(bq) else np.empty(0, bool)
+        kth[bq[ends]] = bd[ends]
+        # every unexplored target lies >= r * size + 1 units away on one axis
+        b = (r * size + 1).astype(np.float64) * min_m_per_deg / E7
+        bound2 = b * b
+        fin = ((found >= qk[open_q]) & (kth[open_q] < bound2)) | (bound2 > c2) | (r >= last[open_q])
+        is_fin = np.zeros(len(qk), bool)
+        is_fin[open_q[fin]] = True
+        emit = is_fin[bq]
+        done_q.append(bq[emit])
+        done_n.append(bn[emit])
+        done_d.append(bd[emit])
+        bq, bn, bd = bq[~emit], bn[~emit], bd[~emit]
+        open_q = open_q[~fin]
+        ring[open_q] += 1
+    if not done_q:
+        return np.empty(0, np.int64), tid[:0], np.empty(0, np.float64)
+    return np.concatenate(done_q), np.concatenate(done_n), np.concatenate(done_d)
+
+
+def _route(queries: DataFrame, targets: DataFrame, cutoff_m: float, target_id: str) -> DataFrame:
+    """Queries (``is_q``, one row per corner tile) and targets (one row per
+    tile, or per sub-bucket of a split tile) in one frame keyed on
+    (tile, sub); only tiles with both sides survive. Built from SQL
+    strings: each Column call is a JVM round trip at plan time."""
+    hx, hy = _box_e7(cutoff_m)
+    tres = tile_res(cutoff_m)
+    corners = ", ".join(
+        cells.cell_sql(f"(CAST(lon_e7 AS BIGINT) + {dx})", f"(CAST(lat_e7 AS BIGINT) + {dy})", tres, "spark")
+        for dx in (-hx, hx)
+        for dy in (-hy, hy)
     )
-    # queries are the reference's bounded request batch (snap server
-    # semantics) — broadcast the exploded query-cell side so the target
-    # table streams through a broadcast join with NO shuffle by cell; the
-    # only full shuffle left in a phase is the candidate->query_id rank.
-    # join_mode (decided per phase by knn_join from EXACT open-set counts):
-    #   "broadcast"     — exploded side provably small; hint it.
-    #   "shuffle_merge" — phase frames are persisted and the exploded side
-    #     exceeds the gate: a cached subtree is compiled from STATIC stats
-    #     (no AQE re-plan inside the cache build), and Catalyst's anti-join
-    #     selectivity estimate makes the shell-exploded side look
-    #     broadcastable — the cache build then dies at scale on Spark's
-    #     8 GiB broadcast cap (observed at sf4/res-13: "Cannot broadcast
-    #     the table that is larger than 8.0 GiB: 10.0 GiB" inside
-    #     CachedRDDBuilder.buildBuffers). Pin the decision structurally.
-    #   "auto"          — lazy (non-persisted) path over the gate: no hint,
-    #     AQE plans the join from runtime stats as before.
-    if join_mode == "broadcast":
-        qj = F.broadcast(q)
-    elif join_mode == "shuffle_merge":
-        qj = q.hint("shuffle_merge")
-    else:
-        qj = q
-    j = targets_cells.join(qj, "cell_id", "inner")
-    return j.select(
-        "query_id",
-        "k",
-        "node_id",
-        equirect_d2_col("qlon", "qlat", "nlon", "nlat").alias("d2"),
+    q = queries.selectExpr("query_id", "k", "lon_e7", "lat_e7", f"explode(array_distinct(array({corners}))) AS tile")
+    t = targets.selectExpr(
+        f"`{target_id}` AS node_id", "lon_e7", "lat_e7", f"{cells.cell_sql('lon_e7', 'lat_e7', tres, 'spark')} AS tile"
     )
-
-
-def _rank_topk(cand: DataFrame, cutoff_m: float) -> DataFrame:
-    # sort-based rank window, NOT a collect_list/array_sort agg: measured
-    # 2x faster on 11M-candidate phases (ObjectHashAggregate array churn
-    # loses to Tungsten radix sort) and the shuffle volume is identical.
-    # Also measured and REJECTED: adding a literal `rank <= kmax` conjunct
-    # to trigger Spark 4's WindowGroupLimit rank pushdown (`rank <= k` is
-    # a column predicate, which the rule can't use). The partial
-    # WindowGroupLimit pre-sorts every map partition by (query_id, d2,
-    # node_id) BEFORE the exchange — an extra full local sort of the 11M
-    # candidates that cost 3.5x (26 s vs 7.4 s alternating A/B at
-    # sf0.1/local[32]) and only trims shuffle bytes, which a post-shuffle
-    # single sort handles cheaper here. Worth re-testing on a real
-    # network-bound cluster; locally the plain window wins.
-    w = Window.partitionBy("query_id").orderBy("d2", "node_id")
-    return (
-        cand.filter(F.col("d2") <= F.lit(cutoff_m * cutoff_m))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
+    # the load table holds at most 4 rows per query (a bounded request batch)
+    load = F.broadcast(
+        q.selectExpr("tile", "1 AS nq", "0 AS nt")
+        .unionByName(t.selectExpr("tile", "0 AS nq", "1 AS nt"))
+        .groupBy("tile")
+        .agg(F.expr("sum(nq) AS nq"), F.expr("sum(nt) AS nt"))
+        .where("nq > 0 AND nt > 0")
+        .selectExpr("tile", f"CAST(greatest(1, ceil(nq * nt / {HOT_TILE_PAIRS})) AS INT) AS nsub")
     )
+    q = q.join(load, "tile").selectExpr("*", "true AS is_q", "pmod(hash(query_id), nsub) AS sub")
+    t = t.join(load, "tile").selectExpr("*", "false AS is_q", "explode(sequence(0, nsub - 1)) AS sub")
+    return q.unionByName(t, allowMissingColumns=True).drop("nsub")
 
 
 def knn_join(
@@ -225,169 +217,65 @@ def knn_join(
     res: int | None = None,
     cutoff_m: float = CUTOFF_M,
     target_id: str = "id",
-    r0: int = RING_R0,
-    ring_growth: int = RING_GROWTH,
-    materialize_remaining: bool = True,
 ) -> DataFrame:
     """Top-k nearest targets per query point under the snap cutoff.
 
+    ``queries`` has (query_id, lon_e7, lat_e7, k); ``targets`` has an
+    integer id column ``target_id`` and lon_e7, lat_e7. ``res`` pins the
+    kernel's fine grid level; ``None`` sizes it per tile from the tile's
+    occupancy. Results are identical at every level.
+
     Output: (query_id, rank, node_id, dist_m) — rank 1-based by
     (d2, node_id); dist_m rounded to mm. Queries with no target inside
-    the cutoff produce no rows (reference empty-snap semantics).
-
-    Caching contract: the multi-phase path returns a PERSISTED frame
-    (bounded: <= sum(k) rows) — the per-phase partials are materialized
-    through it and released before returning. A caller looping over many
-    knn_join calls in one session should unpersist the returned frame
-    once consumed (or clearCache between iterations, as bench.py does).
+    the cutoff produce no rows (reference empty-snap semantics). The
+    frame is lazy: nothing runs and nothing is cached until it is used.
     """
-    if res is None:
-        res = adaptive_res(targets)
-        # covering refinement: go finer (4x less candidate volume per
-        # level) while the R0*growth phase-2 rectangle still covers the
-        # cutoff — past that point open queries meet 1000+-cell shells
-        # (measured res-13 cliff at sf1, ~490 s vs 87 s at res 12)
-        while res < RES_CEIL:
-            nlon, nlat = _edge_m(res + 1)
-            if max(int(cutoff_m / nlon) + 1, int(cutoff_m / nlat) + 1) <= r0 * ring_growth:
-                res += 1
-            else:
-                break
-    tc = targets.select(
-        F.col(target_id).alias("node_id"),
-        F.col("lon_e7").alias("nlon"),
-        F.col("lat_e7").alias("nlat"),
-        cells.cell_col("lon_e7", "lat_e7", res).alias("cell_id"),
-    )
+    if res is not None and not cells.RES_MIN <= res <= cells.RES_MAX:
+        raise ValueError(f"resolution {res} out of [{cells.RES_MIN},{cells.RES_MAX}]")
+    rows = _route(queries, targets, cutoff_m, target_id)
 
-    edge_lon_m, edge_lat_m = _edge_m(res)
-    min_edge = min(edge_lon_m, edge_lat_m)
-    # floor-grid cover bound per axis: every point within cutoff lies
-    # within this many cells of the query cell
-    rx_max = int(cutoff_m / edge_lon_m) + 1
-    ry_max = int(cutoff_m / edge_lat_m) + 1
-
-    # coarse emptiness prefilter (J10 tile-membership): queries whose
-    # cutoff rectangle at a coarse level contains NO target cell can never
-    # produce a row — drop them before any ring work (the reference's
-    # region-tile membership gate, region_tiles.rs:98-120)
-    coarse = min(8, res)  # never coarser than the chosen working res
-    ce_lon, ce_lat = _edge_m(coarse)
-    crx, cry = int(cutoff_m / ce_lon) + 1, int(cutoff_m / ce_lat) + 1
-    tcells = tc.select(cells.parent_col("cell_id", res, coarse).alias("ccell")).distinct()
-    qoff = F.array(
-        *[
-            F.lit(dy * (1 << cells.Y_SHIFT) + dx)
-            for dx in range(-crx, crx + 1)
-            for dy in range(-cry, cry + 1)
-        ]
-    )
-    q_live = (
-        queries.withColumn("qc", cells.cell_col("lon_e7", "lat_e7", coarse))
-        .withColumn("off", F.explode(qoff))
-        .withColumn("ccell", F.col("qc") + F.col("off"))
-        .join(F.broadcast(tcells), "ccell", "left_semi")
-        .select("query_id", "lon_e7", "lat_e7", "k")
-        .distinct()
-    )
-
-    # Data-driven broadcast decision, PER PHASE: the exploded query-cell
-    # side is exactly n_open x shell_cells rows, and both factors are known
-    # before the phase runs (materialize_remaining already pays for an
-    # exact open-set count each phase; phase 1 uses the batch count).
-    # On the LAZY path (materialize_remaining=False) n_open keeps the
-    # initial full-batch value — a conservative OVERestimate that can only
-    # suppress a broadcast, never unsafely enable one; the per-phase
-    # broadcast win is deliberately forfeited there rather than paying a
-    # count() on an unmaterialized anti-join chain (ADVICE r4).
-    # A one-shot gate on the WIDEST phase (round-3's rule) was doubly
-    # wrong: it disabled the broadcast for the tiny early phases — where
-    # most queries resolve — and, combined with the shuffle_merge pin,
-    # cost ~4x on the sf0.1 headline (measured 37.9 s vs 8.8 s); while
-    # per-phase exact counts still reject the genuinely unbounded sf4
-    # res-13 shells that killed the cached-plan broadcast.
-    n_queries = queries.count()
-    n_open = n_queries
-
-    remaining = q_live
-    carried: DataFrame | None = None  # top-k-so-far of still-open queries
-    parts: list[DataFrame] = []
-    phase_frames: list[DataFrame] = []  # persisted partials, released below
-    R = r0
-    prev_rx = prev_ry = -1
-    while True:
-        covers_cutoff = R >= rx_max and R >= ry_max
-        rx, ry = min(R, rx_max), min(R, ry_max)
-        shell_cells = (2 * rx + 1) * (2 * ry + 1) - (
-            (2 * prev_rx + 1) * (2 * prev_ry + 1) if prev_rx >= 0 else 0
+    def snap(batches):
+        batches = list(batches)
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches)
+        tile, sub = tbl["tile"].to_numpy(), tbl["sub"].to_numpy()
+        is_q = tbl["is_q"].to_numpy(zero_copy_only=False)
+        lon, lat = tbl["lon_e7"].to_numpy(), tbl["lat_e7"].to_numpy()
+        k, node = tbl["k"].fill_null(0).to_numpy(), tbl["node_id"].fill_null(0).to_numpy()
+        order = np.lexsort((sub, tile))
+        qrows, nodes, d2s = [], [], []
+        for g in np.split(order, np.flatnonzero(np.diff(tile[order]) | np.diff(sub[order])) + 1):
+            gq, gt = g[is_q[g]], g[~is_q[g]]
+            qi, nd, d2 = snap_tile(lon[gq], lat[gq], k[gq], node[gt], lon[gt], lat[gt], cutoff_m, res)
+            qrows.append(gq[qi])
+            nodes.append(nd)
+            d2s.append(d2)
+        r = pa.array(np.concatenate(qrows))
+        yield pa.RecordBatch.from_arrays(
+            [
+                tbl["query_id"].take(r).combine_chunks(),
+                tbl["k"].take(r).combine_chunks(),
+                pa.array(np.concatenate(nodes), type=tbl.schema.field("node_id").type),
+                pa.array(np.concatenate(d2s), type=pa.float64()),
+            ],
+            names=["query_id", "k", "node_id", "d2"],
         )
-        if n_open * shell_cells <= BROADCAST_MAX_ROWS:
-            join_mode = "broadcast"
-        elif materialize_remaining:
-            join_mode = "shuffle_merge"  # persisted subtree: never trust static stats
-        else:
-            join_mode = "auto"  # lazy path: AQE re-plans from runtime stats
-        # only the NEW shell of cells is scanned this phase; the inner
-        # rectangle's contribution is the carried top-k partial (any point
-        # outside a query's inner top-k can never enter the global top-k)
-        cand = _candidates(remaining, tc, res, rx, ry, prev_rx, prev_ry, join_mode=join_mode)
-        if carried is not None:
-            cand = cand.unionByName(carried)
-        ranked = _rank_topk(cand, cutoff_m)
-        if covers_cutoff:
-            parts.append(ranked)
-            break
-        ranked = ranked.persist()
-        phase_frames.append(ranked)
-        bound_m = min(R * min_edge, cutoff_m)
-        kth = ranked.groupBy("query_id").agg(
-            F.max("rank").alias("n_found"), F.max("d2").alias("kth_d2"), F.first("k").alias("k")
-        )
-        done_q = kth.filter(
-            (F.col("n_found") >= F.col("k")) & (F.col("kth_d2") < F.lit(bound_m * bound_m))
-        ).select("query_id")
-        parts.append(ranked.join(done_q, "query_id", "left_semi"))
-        # queries with zero candidates so far are absent from ranked and
-        # must keep widening — hence anti-join on the done set
-        remaining = remaining.join(done_q, "query_id", "left_anti")
-        if materialize_remaining:
-            # measured lever (round-4): cache the pruned query set so the
-            # next phase's shell explode plans over a materialized table
-            # instead of re-planning the anti-join under the explode.
-            # A/B (scripts/measure_knn_prune.py, sf0.1/local[32], two
-            # independent min-of-3 rounds): 7.21/8.49 s lazy vs 6.72/7.90 s
-            # materialized — +7 % both rounds and tighter pass-to-pass
-            # spread; results hash-identical (asserted in the script).
-            # The cost is one bounded persist + count of the (small,
-            # query-side-only) open set per widening phase.
-            remaining = remaining.persist()
-            n_open = remaining.count()
-            phase_frames.append(remaining)
-        carried = ranked.join(done_q, "query_id", "left_anti").select(
-            "query_id", "k", "node_id", "d2"
-        )
-        prev_rx, prev_ry = rx, ry
-        R *= ring_growth
 
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out = out.select(
-        "query_id",
-        F.col("rank").cast("int").alias("rank"),
-        "node_id",
-        F.round(F.sqrt("d2"), 3).alias("dist_m"),
+    schema = StructType(
+        [rows.schema["query_id"], rows.schema["k"], rows.schema["node_id"], StructField("d2", DoubleType())]
     )
-    if phase_frames:
-        # materialize the (bounded: <= sum(k) rows) result once, then
-        # release every per-phase partial — previously the partials stayed
-        # cached for the session lifetime and contaminated later
-        # measurements (bench worked around it with clearCache)
-        out = out.persist()
-        out.count()
-        for f in phase_frames:
-            f.unpersist()
-    return out
+    # one Python task per scheduler slot: each task has a fixed cost that
+    # outweighs the kernel here (warm knn_join on 4 cores with 4 / 8 / 32
+    # tasks: sf0.01 2.7 / 2.6 / 5.0 s, sf0.1 3.2 / 3.6 / 5.9 s); an explicit
+    # count also keeps AQE from coalescing the stage into one serial task
+    n = queries.sparkSession.sparkContext.defaultParallelism
+    best = rows.repartition(n, "tile", "sub").mapInArrow(snap, schema)
+    return (
+        best.selectExpr("*", "row_number() OVER (PARTITION BY query_id ORDER BY d2, node_id) AS rank")
+        .where("rank <= k")
+        .selectExpr("query_id", "CAST(rank AS INT) AS rank", "node_id", "round(sqrt(d2), 3) AS dist_m")
+    )
 
 
 def knn_oracle_sql(fix: str, cutoff_m: float = CUTOFF_M) -> str:

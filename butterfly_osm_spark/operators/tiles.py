@@ -264,7 +264,7 @@ def tile_pyramid(
         "n",
     )
     # child -> parent at (base_res - res) levels up is a pure right shift
-    # of the unpacked x/y (power-of-two aligned grid; parent_col's shape,
+    # of the unpacked x/y (power-of-two aligned grid; parent_np's shape,
     # but with a per-row shift distance)
     parent = (
         F.col("res").cast("long") * F.lit(1 << cells.RES_SHIFT)

@@ -184,6 +184,23 @@ def test_pip_subset_of_bbox(spark, fix001):
     assert len(hits) > 0
 
 
+def test_default_driver_memory_fits_ram(tmp_path):
+    """The default driver heap is min(48g, half of MemTotal), so it always
+    fits the machine; SPARK_GRAFT_DRIVER_MEM overrides it in get_spark."""
+    from butterfly_osm_spark.session import default_driver_memory
+
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    mb = int(default_driver_memory().removesuffix("m"))
+    assert 0 < mb * 1024 <= total_kb // 2 + 1024
+
+    small, big = tmp_path / "small", tmp_path / "big"
+    small.write_text("MemTotal:       16000000 kB\nMemFree:  1 kB\n")
+    big.write_text("MemTotal:      536870912 kB\n")
+    assert default_driver_memory(str(small)) == "7812m"
+    assert default_driver_memory(str(big)) == "49152m"
+
+
 def test_pip_oracle_at_session_defaults(fix001):
     """Regression for the round-1 salt-dtype bug: pip_join must hash-match
     the DuckDB oracle under the SHIPPED session defaults (local[32],
@@ -240,24 +257,22 @@ def test_pip_broadcast_gate_fallback_parity(spark, fix001, monkeypatch):
 
 
 def test_knn_releases_phase_caches(spark, fix001):
-    """knn_join must not leak per-phase persisted partials into the session:
-    after the call, at most the (bounded) result frame itself is newly
-    cached. Measured as a DELTA because earlier tests in the shared
-    session may legitimately hold their own bounded result frames (e.g.
-    a CC query's final label checkpoint), which clearCache() does not
-    reach."""
+    """knn_join persists nothing: running it leaves no new cached RDD in
+    the session. Measured as an identity-set delta because earlier tests
+    in the shared session may legitimately hold their own bounded result
+    frames (e.g. a CC query's final label checkpoint)."""
     from butterfly_osm_spark.operators.knn import knn_join
 
-    spark.catalog.clearCache()
-    before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    from .conftest import persistent_rdd_ids
+
+    before = persistent_rdd_ids(spark)
     df = knn_join(
         spark.read.parquet(fix001 + "/query_points.parquet"),
         spark.read.parquet(fix001 + "/osm_nodes.parquet"),
     )
     df.count()
-    cached = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert cached - before <= 1, f"{cached - before} new RDDs cached after knn_join"
-    spark.catalog.clearCache()
+    new_cached = persistent_rdd_ids(spark) - before
+    assert not new_cached, f"{new_cached} cached after knn_join"
 
 
 def test_connected_components_releases_iteration_checkpoints(spark):
@@ -294,9 +309,8 @@ def test_connected_components_releases_iteration_checkpoints(spark):
 
 
 def test_knn_res_invariance_fine_res_offsets(spark, fix001):
-    """Results must be identical at any working resolution; res 13 forces
-    |dy| >= 8 ring offsets, the int32-overflow regression zone (the step
-    multiply must be long — ANSI mode fails the task otherwise)."""
+    """Results must be identical at any fine grid level of the kernel:
+    res 13 walks dozens of rings per query, res 10 a few."""
     from butterfly_osm_spark.operators.knn import knn_join
 
     q = spark.read.parquet(f"{fix001}/query_points.parquet")
@@ -318,20 +332,128 @@ def test_registry_contract_consistency():
         assert name in QUERIES, name
 
 
-def test_knn_join_mode_gate_parity(spark, fix001, monkeypatch):
-    """The per-phase join-mode gate (broadcast under 4M exploded rows,
-    shuffle_merge pin over it when phase frames are persisted) is a plan
-    choice, never a semantics choice: forcing the gate shut must produce
-    the identical ranked result set."""
+def test_knn_hot_tile_split_parity(spark, fix001, monkeypatch):
+    """Splitting hot tiles into query sub-buckets is a plan choice, never
+    a semantics choice: with the split constant forced low the split must
+    fire and the ranked result set must stay identical."""
+    from pyspark.sql import functions as F
+
     from butterfly_osm_spark.operators import knn
 
     q = spark.read.parquet(fix001 + "/query_points.parquet")
     n = spark.read.parquet(fix001 + "/osm_nodes.parquet")
     want = sorted(map(tuple, knn.knn_join(q, n).collect()))
-    monkeypatch.setattr(knn, "BROADCAST_MAX_ROWS", 0)  # every phase pinned
+    monkeypatch.setattr(knn, "HOT_TILE_PAIRS", 4)
+    routed = knn._route(q, n, knn.CUTOFF_M, "id").where("is_q")
+    assert routed.agg(F.max("sub")).first()[0] > 0, "the hot-tile split must fire"
     got = sorted(map(tuple, knn.knn_join(q, n).collect()))
     assert got == want
-    spark.catalog.clearCache()
+
+
+def test_knn_oracle_at_session_defaults(spark, fix001):
+    """knn_join must hash-match the oracle at the shipped defaults (32
+    shuffle partitions, AQE on), not only at the test session's 8: rows
+    that should meet in one partition can miss each other only at some
+    partition counts (the round-1 PIP cogroup key-dtype bug passed at 8)."""
+    from butterfly_osm_spark.operators.knn import knn_join, knn_oracle_sql
+
+    from .compare import assert_frames_equal
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+        got = knn_join(
+            spark.read.parquet(fix001 + "/query_points.parquet"),
+            spark.read.parquet(fix001 + "/osm_nodes.parquet"),
+        )
+        assert_frames_equal(got, knn_oracle_sql(fix001))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _knn_brute(qlon, qlat, qk, tid, tlon, tlat, cutoff_m):
+    from butterfly_osm_spark.geo import equirect_d2_np
+
+    rows = []
+    for i in range(len(qk)):
+        d2 = equirect_d2_np(np.full_like(tlon, qlon[i]), np.full_like(tlat, qlat[i]), tlon, tlat)
+        ok = np.flatnonzero(d2 <= cutoff_m * cutoff_m)
+        for j in ok[np.lexsort((tid[ok], d2[ok]))][: qk[i]]:
+            rows.append((i, int(tid[j]), float(d2[j])))
+    return sorted(rows)
+
+
+def _knn_tiled(qlon, qlat, qk, tid, tlon, tlat, cutoff_m, res):
+    """knn_join's plan in numpy: route each query to its corner tiles, run
+    the kernel per tile, keep the best k per query by (d2, node_id)."""
+    from butterfly_osm_spark.operators import knn
+
+    tres = knn.tile_res(cutoff_m)
+    hx, hy = knn._box_e7(cutoff_m)
+    qtiles = [
+        {cells.cell_py(int(x) + dx, int(y) + dy, tres) for dx in (-hx, hx) for dy in (-hy, hy)}
+        for x, y in zip(qlon, qlat)
+    ]
+    ttile = cells.cell_np(tlon, tlat, tres)
+    cand = []
+    for tile in np.unique(ttile):
+        qs = np.array([i for i, ts in enumerate(qtiles) if tile in ts], dtype=np.int64)
+        m = ttile == tile
+        qi, node, d2 = knn.snap_tile(qlon[qs], qlat[qs], qk[qs], tid[m], tlon[m], tlat[m], cutoff_m, res)
+        assert all(np.bincount(qi, minlength=len(qs)) <= qk[qs]), "at most k rows per query per tile"
+        cand += [(int(qs[a]), float(d), int(b)) for a, b, d in zip(qi, node, d2)]
+    rows, taken = [], {}
+    for i, d, b in sorted(cand):
+        taken[i] = taken.get(i, 0) + 1
+        if taken[i] <= qk[i]:
+            rows.append((i, b, d))
+    return sorted(rows), qtiles
+
+
+@pytest.mark.parametrize("res", [None, 6, 9, 13])
+def test_knn_kernel_matches_brute_force(res):
+    """snap_tile per routed tile equals a brute-force scan: equal-d2 ties
+    break on node_id, a query whose box straddles 4 tiles sees all of
+    them, queries with nothing inside the cutoff give no rows, and k
+    above the candidate count returns every candidate."""
+    from butterfly_osm_spark.operators.knn import CUTOFF_M, tile_res
+
+    rng = np.random.default_rng(7)
+    s = cells.SIZE_E7[tile_res(CUTOFF_M)]
+    # a tile corner: the 4 tiles around it all get targets
+    cx, cy = 3 * s - cells.OFF_LON_E7 + 10 * s, 2 * s - cells.OFF_LAT_E7 + 70 * s
+    n = 3000
+    tlon = (cx + rng.integers(-s, s, n)).astype(np.int64)
+    tlat = (cy + rng.integers(-s, s, n)).astype(np.int64)
+    tid = rng.permutation(10 * n)[:n].astype(np.int64)
+    # ties: four targets at the same d2 from the tie query, one duplicate point
+    tq = (cx + 2 * s // 3, cy - 2 * s // 3)
+    ties = [(tq[0] + 900, tq[1]), (tq[0] - 900, tq[1]), (tq[0], tq[1] + 900), (tq[0] + 900, tq[1])]
+    tlon = np.r_[tlon, [p[0] for p in ties]]
+    tlat = np.r_[tlat, [p[1] for p in ties]]
+    tid = np.r_[tid, [10 * n + 4, 10 * n + 2, 10 * n + 9, 10 * n + 1]]
+    # a lone cluster of 3 targets for the k-above-candidates query
+    lone = (cx - 5 * s, cy + 5 * s)
+    tlon = np.r_[tlon, lone[0], lone[0] + 50, lone[0] - 70]
+    tlat = np.r_[tlat, lone[1], lone[1] + 20, lone[1] - 10]
+    tid = np.r_[tid, 1, 2, 3]
+
+    nq = 400
+    qlon = np.r_[cx + rng.integers(-s, s, nq), cx, tq[0], lone[0] + 5, cx + 4 * s].astype(np.int64)
+    qlat = np.r_[cy + rng.integers(-s, s, nq), cy, tq[1], lone[1] + 5, cy - 4 * s].astype(np.int64)
+    qk = np.r_[rng.choice([0, 1, 8, 64], nq), 64, 3, 64, 8].astype(np.int64)
+    corner_q, tie_q, lone_q, empty_q = nq, nq + 1, nq + 2, nq + 3
+
+    want = _knn_brute(qlon, qlat, qk, tid, tlon, tlat, CUTOFF_M)
+    got, qtiles = _knn_tiled(qlon, qlat, qk, tid, tlon, tlat, CUTOFF_M, res)
+    assert got == want
+
+    assert len(qtiles[corner_q]) == 4
+    assert len([r for r in got if r[0] == corner_q]) == 64
+    assert [r[1] for r in got if r[0] == tie_q] == [10 * n + 1, 10 * n + 2, 10 * n + 4]
+    assert [r[1] for r in got if r[0] == lone_q] == [1, 2, 3]
+    assert not [r for r in got if r[0] == empty_q]
 
 
 def test_dedup_pipeline_releases_all_caches(spark):
