@@ -38,10 +38,16 @@ Shape:
 - Merge. ``row_number() OVER (PARTITION BY query_id ORDER BY d2,
   node_id)`` keeps the best k across the query's tiles (W1 deterministic
   ties).
-- Hot tiles. A tile whose queries × targets exceeds ``HOT_TILE_PAIRS``
-  is split: its queries hash into sub-buckets and its targets are
-  copied to each, so no single kernel call holds a quadratic group and
-  the sub-buckets spread over partitions.
+- Hot tiles. The kernel takes a tile's queries ``HOT_TILE_QUERIES`` at
+  a time, so one call's arrays stay bounded however dense the tile. A
+  tile with more queries than that is also split for parallelism: its
+  queries hash into ``min(partitions, ceil(nq / HOT_TILE_QUERIES))``
+  sub-buckets and its targets are copied to each, so the copies never
+  exceed one per kernel partition.
+- Memory. Each kernel partition arrives sorted on (tile, sub) and is
+  consumed one Arrow batch at a time; a group runs as soon as the next
+  one starts, so a task holds one batch plus one group, not its whole
+  partition.
 
 Ranking uses the reference's equirectangular metric with FIXED constants
 (spatial.rs:226-230) — pure arithmetic on fixed-point ints, bit-identical
@@ -63,9 +69,13 @@ CUTOFF_M = 5_000.0  # reference SNAP_CUTOFF (spatial.rs:9)
 # density rule for res=None: the coarsest fine level whose mean occupancy
 # over occupied cells is at most this many targets
 TARGETS_PER_CELL = 16
-# a tile holding more query x target pairs than this is split into
-# sub-buckets of its queries
-HOT_TILE_PAIRS = 1 << 26
+# queries per kernel call: the lockstep ring arrays grow with it. On the
+# heaviest tile of the seed-42 sf1 fixtures (14 461 queries x 142 010
+# targets, 4-core host) 16k / 8k / 4k / 2k queries per call peaked at
+# 253 / 134 / 72 / 40 MB of numpy memory in 6.0 / 5.3 / 4.9 / 5.0 s. A
+# tile with more queries is also split into query sub-buckets that
+# spread over the kernel's partitions.
+HOT_TILE_QUERIES = 4096
 
 
 def _box_e7(cutoff_m: float) -> tuple[int, int]:
@@ -127,8 +137,10 @@ def snap_tile(
     min_m_per_deg = min(M_PER_DEG_LON, M_PER_DEG_LAT)
 
     open_q = np.flatnonzero(qk > 0)
-    # running top-k of the open queries, sorted by (query, d2, node id)
+    # running top-k of the open queries, sorted by (query, d2, node id),
+    # and each query's k-th best d2 once it has k (inf before)
     bq, bn, bd = np.empty(0, np.int64), tid[:0], np.empty(0, np.float64)
+    kth = np.full(len(qk), np.inf)
     done_q, done_n, done_d = [], [], []
     while open_q.size:
         r = ring[open_q]
@@ -147,7 +159,8 @@ def snap_tile(
         pq = np.repeat(qi, m)
         pt = np.arange(m.sum()) - np.repeat(np.cumsum(m) - m, m) + np.repeat(lo, m)
         d2 = equirect_d2_np(qlon[pq], qlat[pq], tlon[pt], tlat[pt])
-        hit = d2 <= c2
+        # a query's full top-k only takes candidates at or below its k-th
+        hit = (d2 <= c2) & (d2 <= kth[pq])
 
         aq = np.concatenate([bq, pq[hit]])
         an = np.concatenate([bn, tid[pt[hit]]])
@@ -159,14 +172,14 @@ def snap_tile(
         keep = idx - start < qk[aq]
         bq, bn, bd = aq[keep], an[keep], ad[keep]
 
-        found = np.bincount(bq, minlength=len(qk))[open_q]
         kth = np.full(len(qk), np.inf)
         ends = np.r_[bq[1:] != bq[:-1], True] if len(bq) else np.empty(0, bool)
         kth[bq[ends]] = bd[ends]
+        kth[np.bincount(bq, minlength=len(qk)) < qk] = np.inf
         # every unexplored target lies >= r * size + 1 units away on one axis
         b = (r * size + 1).astype(np.float64) * min_m_per_deg / E7
         bound2 = b * b
-        fin = ((found >= qk[open_q]) & (kth[open_q] < bound2)) | (bound2 > c2) | (r >= last[open_q])
+        fin = (kth[open_q] < bound2) | (bound2 > c2) | (r >= last[open_q])
         is_fin = np.zeros(len(qk), bool)
         is_fin[open_q[fin]] = True
         emit = is_fin[bq]
@@ -181,7 +194,7 @@ def snap_tile(
     return np.concatenate(done_q), np.concatenate(done_n), np.concatenate(done_d)
 
 
-def _route(queries: DataFrame, targets: DataFrame, cutoff_m: float, target_id: str) -> DataFrame:
+def _route(queries: DataFrame, targets: DataFrame, cutoff_m: float, target_id: str, parts: int) -> DataFrame:
     """Queries (``is_q``, one row per corner tile) and targets (one row per
     tile, or per sub-bucket of a split tile) in one frame keyed on
     (tile, sub); only tiles with both sides survive. Built from SQL
@@ -204,7 +217,7 @@ def _route(queries: DataFrame, targets: DataFrame, cutoff_m: float, target_id: s
         .groupBy("tile")
         .agg(F.expr("sum(nq) AS nq"), F.expr("sum(nt) AS nt"))
         .where("nq > 0 AND nt > 0")
-        .selectExpr("tile", f"CAST(greatest(1, ceil(nq * nt / {HOT_TILE_PAIRS})) AS INT) AS nsub")
+        .selectExpr("tile", f"CAST(least({parts}, ceil(nq / {HOT_TILE_QUERIES})) AS INT) AS nsub")
     )
     q = q.join(load, "tile").selectExpr("*", "true AS is_q", "pmod(hash(query_id), nsub) AS sub")
     t = t.join(load, "tile").selectExpr("*", "false AS is_q", "explode(sequence(0, nsub - 1)) AS sub")
@@ -232,27 +245,45 @@ def knn_join(
     """
     if res is not None and not cells.RES_MIN <= res <= cells.RES_MAX:
         raise ValueError(f"resolution {res} out of [{cells.RES_MIN},{cells.RES_MAX}]")
-    rows = _route(queries, targets, cutoff_m, target_id)
+    # one Python task per scheduler slot: each task has a fixed cost that
+    # outweighs the kernel here (warm knn_join on 4 cores with 4 / 8 / 32
+    # tasks: sf0.01 2.7 / 2.6 / 5.0 s, sf0.1 3.2 / 3.6 / 5.9 s); an explicit
+    # count also keeps AQE from coalescing the stage into one serial task
+    n = queries.sparkSession.sparkContext.defaultParallelism
+    rows = _route(queries, targets, cutoff_m, target_id, n)
 
     def snap(batches):
-        batches = list(batches)
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches)
+        # rows come sorted on (tile, sub): run the complete groups of each
+        # batch and hold back only the last one, which may continue
+        held = []
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            tile, sub = b.column("tile").to_numpy(), b.column("sub").to_numpy()
+            other = np.flatnonzero((tile != tile[-1]) | (sub != sub[-1]))
+            cut = other[-1] + 1 if other.size else 0
+            if cut:
+                yield run(pa.Table.from_batches(held + [b.slice(0, cut)]))
+                held = []
+            held.append(b.slice(cut))
+        if held:
+            yield run(pa.Table.from_batches(held))
+
+    def run(tbl):
         tile, sub = tbl["tile"].to_numpy(), tbl["sub"].to_numpy()
         is_q = tbl["is_q"].to_numpy(zero_copy_only=False)
         lon, lat = tbl["lon_e7"].to_numpy(), tbl["lat_e7"].to_numpy()
         k, node = tbl["k"].fill_null(0).to_numpy(), tbl["node_id"].fill_null(0).to_numpy()
-        order = np.lexsort((sub, tile))
         qrows, nodes, d2s = [], [], []
-        for g in np.split(order, np.flatnonzero(np.diff(tile[order]) | np.diff(sub[order])) + 1):
+        for g in np.split(np.arange(len(tile)), np.flatnonzero(np.diff(tile) | np.diff(sub)) + 1):
             gq, gt = g[is_q[g]], g[~is_q[g]]
-            qi, nd, d2 = snap_tile(lon[gq], lat[gq], k[gq], node[gt], lon[gt], lat[gt], cutoff_m, res)
-            qrows.append(gq[qi])
-            nodes.append(nd)
-            d2s.append(d2)
+            for c in np.array_split(gq, max(1, -(-len(gq) // HOT_TILE_QUERIES))):
+                qi, nd, d2 = snap_tile(lon[c], lat[c], k[c], node[gt], lon[gt], lat[gt], cutoff_m, res)
+                qrows.append(c[qi])
+                nodes.append(nd)
+                d2s.append(d2)
         r = pa.array(np.concatenate(qrows))
-        yield pa.RecordBatch.from_arrays(
+        return pa.RecordBatch.from_arrays(
             [
                 tbl["query_id"].take(r).combine_chunks(),
                 tbl["k"].take(r).combine_chunks(),
@@ -265,12 +296,7 @@ def knn_join(
     schema = StructType(
         [rows.schema["query_id"], rows.schema["k"], rows.schema["node_id"], StructField("d2", DoubleType())]
     )
-    # one Python task per scheduler slot: each task has a fixed cost that
-    # outweighs the kernel here (warm knn_join on 4 cores with 4 / 8 / 32
-    # tasks: sf0.01 2.7 / 2.6 / 5.0 s, sf0.1 3.2 / 3.6 / 5.9 s); an explicit
-    # count also keeps AQE from coalescing the stage into one serial task
-    n = queries.sparkSession.sparkContext.defaultParallelism
-    best = rows.repartition(n, "tile", "sub").mapInArrow(snap, schema)
+    best = rows.repartition(n, "tile", "sub").sortWithinPartitions("tile", "sub").mapInArrow(snap, schema)
     return (
         best.selectExpr("*", "row_number() OVER (PARTITION BY query_id ORDER BY d2, node_id) AS rank")
         .where("rank <= k")

@@ -70,13 +70,6 @@ def get_spark(
         # Deterministic timezone-free behavior.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
-        # G1 sizes its regions from the max heap (32 MB at the old 48g
-        # default, 4 MB at 8g) and treats any object over half a region as
-        # a humongous allocation. Pinning 32 MB keeps GC behaviour the same
-        # on every host size (overlay pass at sf0.01 on 4 cores, one
-        # window: 33.3 s with 4 MB regions, 26.3-27.3 s with 16 MB or 32 MB
-        # regions or the 48g heap; smaller gaps on other seeds).
-        .config("spark.driver.defaultJavaOptions", "-XX:G1HeapRegionSize=32m")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -335,18 +335,35 @@ def test_registry_contract_consistency():
 def test_knn_hot_tile_split_parity(spark, fix001, monkeypatch):
     """Splitting hot tiles into query sub-buckets is a plan choice, never
     a semantics choice: with the split constant forced low the split must
-    fire and the ranked result set must stay identical."""
+    fire and the ranked result set must stay identical. The routed rows
+    stay bounded: no query is copied, and a tile's targets at most once
+    per kernel partition. Tiny Arrow batches make groups span batches."""
     from pyspark.sql import functions as F
 
     from butterfly_osm_spark.operators import knn
 
     q = spark.read.parquet(fix001 + "/query_points.parquet")
     n = spark.read.parquet(fix001 + "/osm_nodes.parquet")
+    parts = spark.sparkContext.defaultParallelism
+
+    def routed():
+        r = knn._route(q, n, knn.CUTOFF_M, "id", parts).groupBy("is_q")
+        return {x.is_q: x for x in r.agg(F.count("*").alias("rows"), F.max("sub").alias("top")).collect()}
+
     want = sorted(map(tuple, knn.knn_join(q, n).collect()))
-    monkeypatch.setattr(knn, "HOT_TILE_PAIRS", 4)
-    routed = knn._route(q, n, knn.CUTOFF_M, "id").where("is_q")
-    assert routed.agg(F.max("sub")).first()[0] > 0, "the hot-tile split must fire"
-    got = sorted(map(tuple, knn.knn_join(q, n).collect()))
+    base = routed()
+    assert base[True].top == base[False].top == 0
+    monkeypatch.setattr(knn, "HOT_TILE_QUERIES", 2)
+    split = routed()
+    assert 0 < split[True].top < parts, "the hot-tile split must fire, capped at the partition count"
+    assert split[True].rows == base[True].rows
+    assert base[False].rows < split[False].rows <= parts * base[False].rows
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        got = sorted(map(tuple, knn.knn_join(q, n).collect()))
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
     assert got == want
 
 
